@@ -15,6 +15,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import pathlib
 import re
 import shutil
 import sys
@@ -431,7 +432,7 @@ def main() -> None:
                 # content hash of this file (VERDICT r14 item 8) so
                 # harness changes are machine-checkable across rounds
                 "bench_sha": hashlib.sha256(
-                    open(os.path.abspath(__file__), "rb").read()
+                    pathlib.Path(__file__).read_bytes()
                 ).hexdigest()[:16],
                 "calib_1t_s": calib_1t_s,
                 "calib_32t_s": calib_32t_s,

@@ -471,7 +471,9 @@ def simhash_signatures(
     # in parallel. Rows out are identical (explode of a 1-element
     # array is 1:1; the filter semantics are unchanged).
     scattered = (
-        ensure_parallelism(df.select(F.col(id_col).alias("id"), text_col))
+        ensure_parallelism(
+            carry_splits(df, df.select(F.col(id_col).alias("id"), text_col))
+        )
         .select(
             "id",
             # Round-15 (§1.2 per-task work): parse each word's md5 into

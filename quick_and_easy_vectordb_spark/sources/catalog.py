@@ -5,6 +5,15 @@ query uses; it returns a lazy DataFrame straight off the parquet scan so
 Catalyst can push filters and prune columns into the file source (the
 dominant win at 100 TB — e.g. a query that never touches ``embedding``
 must not read the ~0.3 KB/row vector payload).
+
+Every call builds its scan anew: the schema, and the two
+normalization decisions below that depend on it, come from one parquet
+footer read in this Python process (``sources.footer.parquet_schema``),
+which runs no Spark job. Nothing is memoised, so a table rewritten or
+replaced between calls is always seen as it is now. A table the footer
+cannot speak for exactly (INT96 or nanosecond timestamps without
+Spark's schema, unsigned integers, no data file) falls back to Spark's
+inferring read, with the same result and the same errors as before.
 """
 
 from __future__ import annotations
@@ -14,6 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from quick_and_easy_vectordb_spark.sources.footer import parquet_schema
 
 TABLES = (
     "region",
@@ -29,17 +40,6 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# Plan-time metadata cache (round-14 optimization): building a scan
-# with an inferred schema costs a parquet-footer read + analysis on
-# EVERY load_table call (~130 ms measured, x several tables x several
-# bench repeats per query). The schema and the two normalization
-# decisions are pure functions of the file bytes, so they are memoized
-# per (path, mtime, size); the scan itself stays a lazy, uncached
-# parquet source — no data or results are ever cached here, and a
-# rewritten file (different mtime/size) re-infers.
-_SCAN_META: dict[tuple, tuple] = {}
-
 
 def _size_conf(v: str) -> int:
     """Parse a Spark byte-size conf value ('134217728b', '128m',
@@ -75,27 +75,6 @@ def _scan_splits(spark: SparkSession, size: int) -> int:
     return max(1, -(-size // split))
 
 
-def _scan_meta(spark: SparkSession, path: str, name: str) -> tuple:
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    hit = _SCAN_META.get(key)
-    if hit is None:
-        schema = spark.read.parquet(path).schema
-        ts_is_long = name == "events" and isinstance(
-            schema["ts"].dataType, T.LongType
-        )
-        ntz_cols = tuple(
-            f.name
-            for f in schema.fields
-            if isinstance(f.dataType, T.TimestampNTZType)
-        )
-        hit = (schema, ts_is_long, ntz_cols, _scan_splits(spark, st.st_size))
-        if len(_SCAN_META) >= 512:  # bound (ADVICE r14): keyed on file
-            _SCAN_META.clear()      # identity, rewrites accumulate
-        _SCAN_META[key] = hit
-    return hit
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan of one table. No caching, no collect — the
     optimizer sees the raw file source.
@@ -120,23 +99,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if not os.path.isfile(path):
-        # directory-shaped tables (not produced by the fixture
-        # generator, but possible for caller-supplied dirs): no stable
-        # single-file identity to key the metadata cache on — take the
-        # uncached inference path.
-        schema = spark.read.parquet(path).schema
-        ts_is_long = name == "events" and isinstance(
-            schema["ts"].dataType, T.LongType
-        )
-        ntz_cols = tuple(
-            f.name
-            for f in schema.fields
-            if isinstance(f.dataType, T.TimestampNTZType)
-        )
-        splits = None
-    else:
-        schema, ts_is_long, ntz_cols, splits = _scan_meta(spark, path, name)
+    schema = parquet_schema(spark, path)
+    ts_is_long = name == "events" and isinstance(
+        schema["ts"].dataType, T.LongType
+    )
+    ntz_cols = tuple(
+        f.name
+        for f in schema.fields
+        if isinstance(f.dataType, T.TimestampNTZType)
+    )
     df = spark.read.schema(schema).parquet(path)
     if ts_is_long:
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -149,10 +120,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # whole engine independent of the writer's isAdjustedToUTC choice.
     for c in ntz_cols:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
-    if splits is not None:
+    if os.path.isfile(path):
         # plan-time hint for operators/util.py:ensure_parallelism —
         # saves a ~30 ms df.rdd round trip per call (round-15)
-        df._qev_scan_splits = splits
+        df._qev_scan_splits = _scan_splits(spark, os.path.getsize(path))
     return df
 
 

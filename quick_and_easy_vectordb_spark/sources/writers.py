@@ -18,9 +18,14 @@ persistence a first-class operator instead:
   shuffle (requires ``saveAsTable``; bucket metadata lives in the
   catalog, not the files).
 
-Delta Lake would add ACID/compaction/time-travel on top; it is not in
-this environment, so the writers stick to built-in parquet (same API
-shape: swap ``format("parquet")`` for ``format("delta")``).
+- ``read_corpus``: the one read path. The scan schema comes from one
+  parquet footer read in-process (``sources.footer.parquet_schema``),
+  so building the read runs no Spark job; the files are listed again on
+  every call, so rows appended or files copied in outside the engine
+  are always seen. Paths the footer cannot speak for exactly (no data
+  file, a remote or glob path, INT96/nanosecond/unsigned columns
+  without Spark's schema) fall back to Spark's inferring read, which
+  behaves and fails as before.
 """
 
 from __future__ import annotations
@@ -28,6 +33,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from quick_and_easy_vectordb_spark.sources.footer import parquet_schema
 
 __all__ = ["write_corpus", "append_rows", "write_bucketed", "read_corpus"]
 
@@ -108,6 +115,7 @@ def write_bucketed(
     w.format("parquet").saveAsTable(table)
 
 
-def read_corpus(spark: SparkSession, path: str) -> DataFrame:
-    """Lazy scan of a written corpus (partition discovery included)."""
-    return spark.read.parquet(path)
+def read_corpus(spark: SparkSession, *paths: str) -> DataFrame:
+    """Lazy scan of a written corpus (partition discovery included),
+    with its schema from one footer: no Spark job until executed."""
+    return spark.read.schema(parquet_schema(spark, *paths)).parquet(*paths)

@@ -27,6 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from quick_and_easy_vectordb_spark.sources.footer import parquet_schema
+from quick_and_easy_vectordb_spark.sources.writers import read_corpus
+
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -48,16 +51,16 @@ def read_events_stream(
 
     ``ts`` is normalized to a session-tz TimestampType regardless of
     the file encoding (timestamp vs timestamp_ntz — the driver fixtures
-    have shipped both): the physical type is probed with a batch schema
-    read so the stream schema always matches the footer, then NTZ is
-    cast (session tz is UTC, so the cast is a pure type change).
-    Watermarks require this — ``withWatermark`` on a column whose type
+    have shipped both): the physical type is probed from a parquet
+    footer (``sources.footer.parquet_schema``, no Spark job) so the
+    stream schema always matches the file, then NTZ is cast (session
+    tz is UTC, so the cast is a pure type change). Watermarks require this — ``withWatermark`` on a column whose type
     silently mismatches the file would misread event time."""
     schema = EVENTS_STREAM_SCHEMA
     ntz = False
     try:
         ntz = isinstance(
-            spark.read.parquet(path).schema["ts"].dataType, T.TimestampNTZType
+            parquet_schema(spark, path)["ts"].dataType, T.TimestampNTZType
         )
     except AnalysisException:
         pass  # empty dir at start-up: keep the declared schema
@@ -255,7 +258,7 @@ def stream_upsert_sink(
         # parquet overwrite is not atomic — an interrupted overwrite can
         # leave a partial target; Delta/Iceberg close that hole.
         try:
-            target = spark.read.parquet(target_path)
+            target = read_corpus(spark, target_path)
         except AnalysisException:  # first batch: no target yet
             merged = batch
         else:

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -16,6 +17,22 @@ SF_SMOKE = "/root/testdata/sf0.001"
 def spark():
     s = get_spark("qev-tests", master="local[4]")
     yield s
+
+
+def spark_jobs(spark, fn) -> int:
+    """Run ``fn()`` under a fresh job group and return how many Spark
+    jobs it started (drains the listener bus first, so a job that just
+    finished is counted)."""
+    sc = spark.sparkContext
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")
